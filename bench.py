@@ -19,7 +19,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kafka_streams_homework_spark import queries as Q
-from kafka_streams_homework_spark.session import get_spark
+from kafka_streams_homework_spark.session import default_parallelism, get_spark
 
 BENCH_QUERIES = [
     "price_alerts",
@@ -344,8 +344,12 @@ def main() -> None:
     # driver's +12% BENCH_r07) is machine-attributable on its face
     # instead of via per-query stddev forensics. The end sample is
     # mostly bench-self-induced (local[32] saturates the box) and is
-    # recorded for completeness only.
-    ncpus = os.cpu_count() or 1
+    # recorded for completeness only. The box is labelled by the CPUs
+    # this process may run on (nproc) and the parallelism Spark actually
+    # uses (SPARK_GRAFT_CPUS); os.cpu_count() counts the host's CPUs
+    # whatever the affinity mask, which labelled an 8-CPU run as 32.
+    nproc = len(os.sched_getaffinity(0))
+    spark_cpus = default_parallelism()
     load_start = os.getloadavg()
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -448,21 +452,23 @@ def main() -> None:
     total = round(sum(timings.values()), 3)
     load_end = os.getloadavg()
     # Three-state verdict (refined after the r8 calibration runs):
-    # - loaded:   competing work RIGHT NOW (1-min load >= 0.25*ncpus);
+    # - loaded:   competing work RIGHT NOW (1-min load >= 0.25 x the
+    #   parallelism the run uses);
     # - settling: idle now but the box was busy within the last
-    #   ~15 min (15-min load >= ncpus/8) — page cache and scheduler
+    #   ~15 min (15-min load >= parallelism/8) — page cache and scheduler
     #   state still biased; r8 measured such runs +3-7% across the
     #   board vs a truly quiet run minutes later with identical code;
     # - quiet:    both clear — the only state whose totals should be
     #   compared round-over-round (BASELINE.md stability note).
-    if load_start[0] >= 0.25 * ncpus:
+    if load_start[0] >= 0.25 * spark_cpus:
         verdict = "loaded"
-    elif load_start[2] >= ncpus / 8:
+    elif load_start[2] >= spark_cpus / 8:
         verdict = "settling"
     else:
         verdict = "quiet"
     box_load = {
-        "ncpus": ncpus,
+        "nproc": nproc,
+        "spark_graft_cpus": spark_cpus,
         "loadavg_start": [round(x, 2) for x in load_start],
         "loadavg_end": [round(x, 2) for x in load_end],
         "verdict": verdict,
@@ -473,7 +479,8 @@ def main() -> None:
         # as a round-over-round reference by accident.
         warn = (
             f"BENCH WARNING: box verdict is '{verdict}' "
-            f"(loadavg_start={box_load['loadavg_start']}, ncpus={ncpus}) — "
+            f"(loadavg_start={box_load['loadavg_start']}, nproc={nproc}, "
+            f"SPARK_GRAFT_CPUS={spark_cpus}) — "
             "totals from this run are NOT comparable round-over-round; "
             "re-run on a quiet box before recording a baseline."
         )

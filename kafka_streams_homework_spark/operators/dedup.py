@@ -30,6 +30,7 @@ Scale design (100 TB corpus):
 
 from __future__ import annotations
 
+import hashlib
 import warnings
 
 from pyspark.sql import DataFrame, Window
@@ -109,11 +110,28 @@ def exact_dup_groups_normalized(documents: DataFrame) -> DataFrame:
 # Per-run substrate memo (r11 ADVICE): checkpointing lost CacheManager's
 # canonicalized-plan dedup, so a query that builds the substrate twice
 # (the jaccard-vs-minhash comparison query) materialized two independent
-# copies. Memoized per (input-plan semantic hash, n); cleared by every
+# copies. Memoized per (session, input plan, n); cleared by every
 # caching.release_caches() so a memo can never outlive its blocks.
 _SUBSTRATE_MEMO: dict[tuple, DataFrame] = {}
 
 on_release(_SUBSTRATE_MEMO.clear)
+
+
+def _plan_key(df: DataFrame) -> tuple:
+    """Memo key for a DataFrame's input plan.
+
+    ``semanticHash()`` alone is a 32-bit hash: two different inputs
+    that collide would share one substrate. The key adds the session
+    and a SHA-256 of the canonicalized plan string together with the
+    plan's input files — the canonical string names a parquet scan as
+    ``Relation [...] parquet`` without its path, so two same-schema
+    tables differ only in their files.
+    """
+    plan = df._jdf.queryExecution().analyzed().canonicalized().toString()
+    digest = hashlib.sha256(
+        "\n".join([plan, *sorted(df.inputFiles())]).encode()
+    ).hexdigest()
+    return (id(df.sparkSession), df.semanticHash(), digest)
 
 
 def _doc_shingle_hashes(documents: DataFrame, n: int) -> DataFrame:
@@ -142,7 +160,7 @@ def _doc_shingle_hashes(documents: DataFrame, n: int) -> DataFrame:
     # materialization on first action replaces the cache-build race
     # between AQE's concurrent leaf stages.
     try:
-        key = (documents.semanticHash(), n)
+        key = (*_plan_key(documents), n)
     except Exception:  # pragma: no cover - e.g. Connect sessions
         key = None
     if key is not None and key in _SUBSTRATE_MEMO:

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kafka_streams_homework_spark.functions import cosine_similarity
+from kafka_streams_homework_spark.sources.batch import local_frame
 
 
 def _topk(scored: DataFrame, k: int) -> DataFrame:
@@ -185,7 +186,8 @@ def kmeans_cells(
     _, X = _sample_vectors(embeddings, fit_sample)
     cents = _kmeans_np(X, ncells, iters)
     spark = embeddings.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, [float(v) for v in c]) for i, c in enumerate(cents)],
         "cell int, centroid array<double>",
     )
@@ -246,7 +248,8 @@ def kmeans_cells_distributed(
 
     spark = embeddings.sparkSession
     for _ in range(iters):
-        cdf = spark.createDataFrame(
+        cdf = local_frame(
+            spark,
             [(i, c) for i, c in enumerate(centroids)],
             "cell int, centroid array<double>",
         )
@@ -272,7 +275,8 @@ def kmeans_cells_distributed(
         for r in new_rows:  # empty cells keep their previous centroid
             centroids[r.cell] = list(map(float, r.centroid))
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, c) for i, c in enumerate(centroids)],
         "cell int, centroid array<double>",
     )
@@ -292,7 +296,7 @@ def assign_cells(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
     rows = centroids.orderBy("cell").collect()
     nested = [[float(v) for v in r.centroid] for r in rows]
     spark = embeddings.sparkSession
-    cdf = spark.createDataFrame([(nested,)], "cents array<array<double>>")
+    cdf = local_frame(spark, [(nested,)], "cents array<array<double>>")
     sims = F.transform(
         F.col("cents"), lambda cent: cosine_similarity(F.col("embedding"), cent)
     )
@@ -494,7 +498,8 @@ def _planes_frame(spark, planes) -> DataFrame:
     plan holds a single attribute reference; the matrix moves once via
     broadcast. Values are bit-identical floats, so oracle parity is
     untouched."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [([[float(x) for x in h] for h in planes],)],
         "planes_mat array<array<double>>",
     )
@@ -547,7 +552,8 @@ def cosine_pairs_lsh(
     """
     first = embeddings.select(F.size("embedding").alias("d")).first()
     if first is None:
-        return embeddings.sparkSession.createDataFrame(
+        return local_frame(
+            embeddings.sparkSession,
             [], "id_a long, id_b long, sim double"
         )
     planes = random_hyperplanes(first["d"], bands * bits_per_band, seed)
@@ -657,7 +663,8 @@ def cosine_pairs_lsh_md5(
     """
     first = embeddings.select(F.size("embedding").alias("d")).first()
     if first is None:
-        return embeddings.sparkSession.createDataFrame(
+        return local_frame(
+            embeddings.sparkSession,
             [], "id_a long, id_b long, sim double"
         )
     planes = md5_hyperplanes(first["d"], bands * bits_per_band)
@@ -730,7 +737,8 @@ def knn_lsh_md5(
     """
     first = embeddings.select(F.size("embedding").alias("d")).first()
     if first is None:
-        return embeddings.sparkSession.createDataFrame(
+        return local_frame(
+            embeddings.sparkSession,
             [], "query_id long, neighbor_id long, sim double, rank long"
         )
     planes = md5_hyperplanes(first["d"], bands * bits_per_band)
@@ -1057,7 +1065,8 @@ def pq_fit(
     spark = embeddings.sparkSession
     _, X = _sample_vectors(embeddings, fit_sample)
     nested = _pq_np(X, m, ksub, iters)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (s, c, [float(v) for v in cent])
             for s, codes in enumerate(nested)
@@ -1140,7 +1149,8 @@ def pq_fit_distributed(
     ]
 
     for _ in range(iters):
-        cdf = spark.createDataFrame(
+        cdf = local_frame(
+            spark,
             codebook, "sub int, code int, centroid array<double>"
         )
         assigned = (
@@ -1169,7 +1179,7 @@ def pq_fit_distributed(
             (s, c, updated.get((s, c), vec)) for s, c, vec in codebook
         ]
 
-    return spark.createDataFrame(codebook, "sub int, code int, centroid array<double>")
+    return local_frame(spark, codebook, "sub int, code int, centroid array<double>")
 
 
 def pq_encode(embeddings: DataFrame, codebook: DataFrame, m: int = 16) -> DataFrame:
@@ -1333,7 +1343,8 @@ def knn_pq_adc(
     nested = _pq_np(X, m, ksub, iters)
     codes = _pq_encode_nested(embeddings, nested)
     spark = embeddings.sparkSession
-    ldf = spark.createDataFrame(
+    ldf = local_frame(
+        spark,
         _query_luts(queries, nested, m), "query_id bigint, lut array<array<double>>"
     )
 
@@ -1431,7 +1442,8 @@ def knn_ivfpq(
     # codebooks); everything corpus-sized stays distributed
     _, X = _sample_vectors(embeddings, FIT_SAMPLE_DEFAULT)
     spark_ = embeddings.sparkSession
-    cents = spark_.createDataFrame(
+    cents = local_frame(
+        spark_,
         [(i, [float(v) for v in c]) for i, c in enumerate(_kmeans_np(X, ncells, iters))],
         "cell int, centroid array<double>",
     )
@@ -1458,7 +1470,8 @@ def knn_ivfpq(
     )
 
     # per-query ADC lookup tables straight from the driver-side codebook
-    ldf = spark_.createDataFrame(
+    ldf = local_frame(
+        spark_,
         _query_luts(queries, nested, m), "query_id bigint, lut array<array<double>>"
     )
 
@@ -1606,7 +1619,8 @@ def pca_projection(embeddings: DataFrame, iters: int = PCA_ITERS) -> DataFrame:
     """
     first = embeddings.select(F.size("embedding").alias("d")).first()
     if first is None:
-        return embeddings.sparkSession.createDataFrame(
+        return local_frame(
+            embeddings.sparkSession,
             [], "vec_id long, label int, pc1_score double"
         )
     dim = first.d

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from kafka_streams_homework_spark.caching import release_checkpoint, tracked_persist
 from kafka_streams_homework_spark.functions import count_in_set, tokens
+from kafka_streams_homework_spark.sources.batch import local_frame
 
 # Stopword list for the heuristic language scorer. Tiny on purpose: the
 # corpus is synthetic; the operator demonstrates the shape (per-doc
@@ -784,9 +785,6 @@ def bpe_train_merges(
     vocabulary runs out of pairs; both engines degrade identically.
     """
     spark = words.sparkSession
-    sym_arr = F.expr(
-        "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-    )
     # r12 (guide §1.2/§7.3): the merge loop is DRIVER-LATENCY bound —
     # every per-step action runs over the vocabulary-sized segmentation
     # (a few hundred k rows), but under AQE each action decomposes into
@@ -971,7 +969,8 @@ def _bpe_train_merges_loop(
     # merge-table callers never read the segmentation again: release
     # the final checkpoint too (the merge records are driver-side)
     release_checkpoint(seg)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges,
         "step long, left_sym string, right_sym string, pair_count long, "
         "n_merged long, corpus_tokens_after long",

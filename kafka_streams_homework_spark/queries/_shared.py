@@ -39,7 +39,7 @@ from kafka_streams_homework_spark.caching import (
     tracked_persist,
 )
 from kafka_streams_homework_spark.session import apply_runtime_confs
-from kafka_streams_homework_spark.sources.batch import load_table, spread
+from kafka_streams_homework_spark.sources.batch import load_table, local_frame, spread
 from kafka_streams_homework_spark.sources.sink import (
     write_and_read_back,
     write_parquet,

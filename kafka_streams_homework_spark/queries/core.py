@@ -690,7 +690,8 @@ def q_pivot_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _t(spark, sf_dir, "events")
-    tiers = spark.createDataFrame(
+    tiers = local_frame(
+        spark,
         [(0.0, 50.0, "low"), (50.0, 150.0, "mid"), (150.0, 1e12, "high")],
         "lo double, hi double, tier string",
     )

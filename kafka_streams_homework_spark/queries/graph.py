@@ -948,7 +948,7 @@ def q_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("d"))
     )
     deg = tracked_persist(deg)
-    ks = spark.createDataFrame([(k,) for k in RICH_CLUB_K], "k int")
+    ks = local_frame(spark, [(k,) for k in RICH_CLUB_K], "k int")
     nodes_k = (
         ks.join(deg, deg["d"] > ks["k"])
         .groupBy("k")

@@ -1342,7 +1342,8 @@ def q_bitemporal_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = tracked_persist(a)
     d0 = a.agg(F.min("tx_day")).collect()[0][0]
-    probes = spark.createDataFrame(
+    probes = local_frame(
+        spark,
         [(d0 + t, d0 + v) for t in (10, 20) for v in (8, 18)],
         "probe_tx long, probe_valid long",
     )

@@ -1125,7 +1125,7 @@ def q_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     anchors.sort(key=lambda r: (r.h, r.vec_id))
     nested = [[float(v) for v in r.embedding] for r in anchors]
-    cdf = spark.createDataFrame([(nested,)], "cents array<array<double>>")
+    cdf = local_frame(spark, [(nested,)], "cents array<array<double>>")
     sims = F.transform(
         F.col("cents"),
         lambda cent: S.cosine_similarity(

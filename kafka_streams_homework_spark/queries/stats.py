@@ -1359,7 +1359,8 @@ def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").over(wo).alias("nc"),
     )
     pre = o.select("i", "nw", "nc").unionAll(
-        o.sparkSession.createDataFrame(
+        local_frame(
+            o.sparkSession,
             [(0, 0, 0)], "i int, nw long, nc long"
         ).select(
             F.col("i").cast("int"),

@@ -527,16 +527,14 @@ def q_streaming_sessionize_append(spark: SparkSession, sf_dir: str) -> DataFrame
             "ts": far_future,
             "value": 0.0,
         }
-        sentinel = spark.createDataFrame(
+        sentinel = local_frame(
+            spark,
             [tuple(sent_vals.get(f.name) for f in raw_schema.fields)],
             schema=raw_schema,
         )
-        # repartition(1), NOT coalesce(1): a coalesced one-row write
-        # inherits 32 parents' preferred locations and stalls ~5 s in
-        # the scheduler's locality wait (measured; the third and
-        # largest r8-drift component). The shuffle breaks the
-        # preference — 0.5 s, same single file.
-        sentinel.repartition(1).write.mode("append").parquet(staged)
+        # a one-row LocalRelation scans as one partition with no
+        # preferred locations: one file, no shuffle, no locality wait
+        sentinel.write.mode("append").parquet(staged)
         stream = (
             qs.readStream.schema(raw_schema)
             .option("maxFilesPerTrigger", 1)
@@ -1992,7 +1990,7 @@ def q_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     anchors.sort(key=lambda r: (r.h, r.vec_id))
     nested = [[float(v) for v in r.embedding] for r in anchors]
-    cdf = spark.createDataFrame([(nested,)], "cents array<array<double>>")
+    cdf = local_frame(spark, [(nested,)], "cents array<array<double>>")
     sims = F.transform(
         F.col("cents"),
         lambda cent: S.cosine_similarity(
@@ -2109,7 +2107,8 @@ def q_streaming_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     # matrix — 8 state-store instances ample; see _shared.py rationale
     qs = _stream_session(spark)
     stream = _events_stream(qs, sf_dir)
-    js = qs.createDataFrame(
+    js = local_frame(
+        qs,
         [(i,) for i in range(SCMS_D)], "j int"
     )
 

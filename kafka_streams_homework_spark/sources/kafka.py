@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_streams_homework_spark.sources.batch import local_frame
+
 KAFKA_PACKAGE_HINT = (
     "kafka data source not available in this environment; submit with "
     "--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version> "
@@ -115,7 +117,7 @@ def _jvm_avro_available() -> bool:
                 '{"type":"record","name":"p","fields":'
                 '[{"name":"x","type":"long"}]}'
             )
-            spark.createDataFrame([], "v binary").select(
+            local_frame(spark, [], "v binary").select(
                 from_avro(F.col("v"), probe_schema)
             ).schema
             _JVM_AVRO_AVAILABLE = True

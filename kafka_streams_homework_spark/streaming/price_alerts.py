@@ -23,8 +23,12 @@ aggregation per micro-batch; state store backend should be RocksDB
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from kafka_streams_homework_spark.sources.batch import local_frame
 
 
 def price_alerts_stream(
@@ -137,17 +141,23 @@ def run_upsert(
     input, maxFilesPerTrigger) yields stale intermediate rows alongside
     final ones. ``foreachBatch`` is the canonical upsert sink shape:
     micro-batches arrive in order, so last-writer-wins per key is
-    exactly "current aggregate value". At scale the dict becomes a
+    exactly "current aggregate value". At scale the keep-last becomes a
     keyed upsert to Kafka/Delta (the reference's alerts topic,
-    dsl/PriceAlertsApp.java:134); alert rows are threshold-filtered so
-    the driver-side footprint here is the alert table itself.
+    dsl/PriceAlertsApp.java:134).
+
+    Batches move as ARROW tables (``toArrow()``, as in ``run_append``)
+    and are folded keep-last per key after every batch, so the driver
+    holds one row per key. The result is a driver-held
+    ``LocalRelation`` sized to the alert table: alert rows are
+    threshold-filtered, and scanning the frame schedules no Python
+    worker tasks.
     """
-    state: dict[tuple, dict] = {}
+    state: list[pa.Table] = []
 
     def upsert(batch_df: DataFrame, _batch_id: int) -> None:
-        for r in batch_df.collect():
-            d = r.asDict()
-            state[tuple(d[k] for k in key_cols)] = d
+        t = batch_df.toArrow()
+        if t.num_rows:
+            state[:] = [_keep_last(pa.concat_tables(state + [t]), key_cols)]
 
     q = (
         alerts.writeStream.foreachBatch(upsert)
@@ -156,7 +166,29 @@ def run_upsert(
         .start()
     )
     q.awaitTermination()
-    return spark.createDataFrame(list(state.values()), schema=alerts.schema)
+    return _collected_frame(spark, state, alerts.schema)
+
+
+def _keep_last(table: pa.Table, key_cols: list[str]) -> pa.Table:
+    """The last row per key, keys in order of first appearance — the
+    insertion-ordered dict upsert, vectorized."""
+    seq = pa.array(range(table.num_rows), pa.int64())
+    last = (
+        table.append_column("__seq", seq)
+        .group_by(key_cols, use_threads=False)
+        .aggregate([("__seq", "max")])
+    )
+    return table.take(last["__seq_max"])
+
+
+def _collected_frame(
+    spark: SparkSession, tables: list[pa.Table], schema: StructType
+) -> DataFrame:
+    """The Arrow tables a foreachBatch collector kept, as one
+    driver-held ``LocalRelation`` (typed and empty when none)."""
+    if not tables:
+        return local_frame(spark, [], schema)
+    return spark.createDataFrame(pa.concat_tables(tables), schema=schema)
 
 
 def run_append(
@@ -176,8 +208,6 @@ def run_append(
     vectorized transfer per micro-batch and the rebuild skips the
     per-row verify/toInternal walk (measured ~2.3 s of pure driver
     CPU for a 95k-row session result)."""
-    import pyarrow as pa
-
     tables: list[pa.Table] = []
 
     def append(batch_df: DataFrame, _batch_id: int) -> None:
@@ -192,9 +222,7 @@ def run_append(
         .start()
     )
     q.awaitTermination()
-    if not tables:
-        return spark.createDataFrame([], schema=result.schema)
-    return spark.createDataFrame(pa.concat_tables(tables))
+    return _collected_frame(spark, tables, result.schema)
 
 
 def run_replace(
@@ -219,8 +247,6 @@ def run_replace(
     still open when input ends are withheld until a later watermark
     advance).
     """
-    import pyarrow as pa
-
     state: list[pa.Table] = []
 
     def replace(batch_df: DataFrame, _batch_id: int) -> None:
@@ -234,9 +260,7 @@ def run_replace(
         .start()
     )
     q.awaitTermination()
-    if not state or state[0].num_rows == 0:
-        return spark.createDataFrame([], schema=result.schema)
-    return spark.createDataFrame(state[0])
+    return _collected_frame(spark, state, result.schema)
 
 
 def windowed_distinct_stream(
@@ -298,21 +322,19 @@ def run_batch_transform(spark, stream, transform, sink=None):
 
     DRIVER-SIDE LIMIT: with the default ``sink=None`` this helper
     accumulates every micro-batch's transformed rows on the driver
-    (``collect()`` into a Python list) so the registry twin can hand
+    (``toArrow()`` tables in a Python list) so the registry twin can hand
     one comparable DataFrame back — fine at fixture scale, NOT for
     production volumes. At scale, pass ``sink`` (a callable taking the
     transformed batch DataFrame) and each batch appends to storage
     (Kafka/Delta/parquet) instead of the driver list; the return value
     is then an empty typed DataFrame and the sink owns the output.
     """
-    schema = transform(spark.createDataFrame([], stream.schema)).schema
+    schema = transform(local_frame(spark, [], stream.schema)).schema
     # Batches move as ARROW tables (r12, guide §6 "Arrow for driver
     # transfers"): collect() walked every transformed row through the
     # Row/verify path on the driver (~1-2 s of pure driver CPU for a
     # 100k-row batch); toArrow() is one vectorized transfer per
     # micro-batch — the same fix run_append got in r9.
-    import pyarrow as pa
-
     tables: list[pa.Table] = []
 
     def body(batch_df: DataFrame, _batch_id: int) -> None:
@@ -331,6 +353,4 @@ def run_batch_transform(spark, stream, transform, sink=None):
         .start()
     )
     q.awaitTermination()
-    if not tables:
-        return spark.createDataFrame([], schema=schema)
-    return spark.createDataFrame(pa.concat_tables(tables), schema=schema)
+    return _collected_frame(spark, tables, schema)

@@ -476,3 +476,21 @@ def test_mmr_rerank_matches_python_greedy_replay(spark, sf_dir):
                     best = (key, nid)
             sel.append(best[1])
             assert out[(qid, t)] == best[1], (qid, t, sel, out)
+
+
+def test_substrate_memo_separates_colliding_inputs(spark, tmp_path, monkeypatch):
+    """The shingle-substrate memo must not hand one input's substrate to
+    another whose 32-bit semanticHash collides. Two same-schema parquet
+    tables with a forced-equal hash plan to the same canonical string
+    (a parquet scan prints without its path), so only the rest of the
+    key tells them apart."""
+    docs = []
+    for i, text in enumerate(["the quick brown fox jumps", "lorem ipsum dolor sit amet"]):
+        p = str(tmp_path / f"docs{i}")
+        spark.createDataFrame([(1, text)], "doc_id long, text string").write.parquet(p)
+        docs.append(spark.read.parquet(p))
+    monkeypatch.setattr(type(docs[0]), "semanticHash", lambda self: 0)
+    assert docs[0].semanticHash() == docs[1].semanticHash()
+    a, b = (D._doc_shingle_hashes(d, 2) for d in docs)
+    assert a is not b
+    assert a.collect() != b.collect()

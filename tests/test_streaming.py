@@ -864,3 +864,117 @@ def test_ohlc_stream_state_is_merge_order_safe(spark, tmp_path):
     multi = run({"maxFilesPerTrigger": 1})
     single = run({})
     assert multi == single == (500.0, 900.0, 50.0, 200.0, 5)
+
+
+@pytest.mark.parametrize("runner", ["upsert", "append", "replace", "batch_transform"])
+@pytest.mark.parametrize(
+    "min_value", [pytest.param(0.0, id="rows"), pytest.param(1e9, id="empty")]
+)
+def test_runner_results_are_local_relations(spark, tmp_path, runner, min_value):
+    """The availableNow runners hand their collected rows back as a
+    JVM-local relation, not a Python RDD: a list-built frame plans as
+    ``Scan ExistingRDD`` and every action on it runs one Python-worker
+    task per defaultParallelism slice, whatever the row count. Holds for
+    empty results too (the typed empty fallback)."""
+    from pyspark.sql import functions as F
+
+    from kafka_streams_homework_spark.streaming.price_alerts import (
+        run_append,
+        run_batch_transform,
+    )
+
+    path = _write_events(
+        spark,
+        tmp_path,
+        [[(1, ts(0, 0), 1.0), (2, ts(1, 0), 2.0)], [(1, ts(30, 0), 3.0)]],
+    )
+    events = _stream(spark, path).filter(F.col("value") > min_value)
+    totals = events.groupBy("user_id").agg(F.sum("value").alias("total"))
+    if runner == "upsert":
+        out, n = run_upsert(spark, totals, ["user_id"]), 2
+    elif runner == "append":
+        out, n = run_append(spark, events), 3
+    elif runner == "replace":
+        out, n = run_replace(spark, totals), 2
+    else:
+        out, n = run_batch_transform(
+            spark, events, lambda b: b.select("user_id", "value")
+        ), 3
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert out.count() == (0 if min_value else n)
+
+
+def test_upsert_keeps_latest_row_per_key_across_batches(spark, tmp_path):
+    """run_upsert's keep-last fold: per key the final aggregate wins,
+    keys untouched by later batches keep their earlier row."""
+    from pyspark.sql import functions as F
+
+    path = _write_events(
+        spark,
+        tmp_path,
+        [
+            [(1, ts(0, 0), 1.0), (2, ts(1, 0), 2.0)],
+            [(1, ts(30, 0), 3.0)],
+            [(3, ts(40, 0), 5.0), (1, ts(45, 0), 4.0)],
+        ],
+    )
+    totals = (
+        _stream(spark, path)
+        .groupBy("user_id")
+        .agg(F.sum("value").alias("total"), F.count(F.lit(1)).alias("n"))
+    )
+    out = run_upsert(spark, totals, ["user_id"]).collect()
+    assert sorted(tuple(r) for r in out) == [(1, 8.0, 3), (2, 2.0, 1), (3, 5.0, 1)]
+
+
+def test_local_frame_matches_list_path(spark):
+    """local_frame takes the rows createDataFrame(<list>) takes —
+    tuples, Rows and dicts, nested and null values — and yields the
+    same rows and schema."""
+    from pyspark.sql import Row
+
+    from kafka_streams_homework_spark.sources.batch import local_frame
+
+    ddl = "id long, v array<array<double>>, s struct<x:int,y:string>, d date"
+    rows = [
+        (1, [[1.0, 2.0], [3.0]], (7, "a"), dt.date(2024, 1, 2)),
+        Row(id=2, v=None, s=None, d=None),
+        {"id": 3, "v": [[]], "s": {"x": 8, "y": None}, "d": dt.date(2024, 2, 1)},
+    ]
+    via_list = spark.createDataFrame(rows, ddl)
+    via_arrow = local_frame(spark, rows, ddl)
+    assert via_arrow.schema == via_list.schema
+    assert via_arrow.collect() == via_list.collect()
+    assert local_frame(spark, [], via_list.schema).schema == via_list.schema
+
+
+def test_local_frame_naive_datetime_is_process_local_time(spark):
+    """A naive datetime means process-local time in createDataFrame(<list>);
+    local_frame must keep that rule under a non-UTC zone, or a
+    driver-built timestamp (the sessionize sentinel) shifts silently.
+    A plain pa.Table.from_pylist would read it as UTC (00:05)."""
+    import os
+    import time
+
+    from pyspark.sql import functions as F
+
+    from kafka_streams_homework_spark.sources.batch import local_frame
+
+    def utc(df):
+        return df.select(F.date_format("ts", "yyyy-MM-dd HH:mm")).first()[0]
+
+    rows = [(dt.datetime(2024, 1, 1, 0, 5),)]
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        via_list = spark.createDataFrame(rows, "ts timestamp")
+        via_arrow = local_frame(spark, rows, "ts timestamp")
+        assert utc(via_arrow) == utc(via_list) == "2024-01-01 05:05"
+    finally:
+        if old is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old
+        time.tzset()

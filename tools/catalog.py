@@ -24,6 +24,11 @@ def main() -> None:
         "or hash-dependent output; bounds pinned in pytest). Positions ≤",
         f"{WINDOW} fall inside the driver's per-round correctness sample;",
         "the rest are swept by `tools/check_oracle.py`.\n",
+        "\nA returned DataFrame is valid only until the next",
+        "`caching.release_caches()`: its plan may read checkpoints",
+        "(`caching.tracked_checkpoint`) that the call frees, after which",
+        "any action on it fails. Collect or write the result first, and",
+        "call the query again for a fresh plan.\n",
         "\n| # | query | check | description |",
         "|---|---|---|---|",
     ]
